@@ -1,26 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same engine config as graft.Bench / Sessions.local, so the
-      // correctness gate exercises exactly the configuration the bench
-      // times (cached-plan AQE coalescing, round 16)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // same local scratch as the bench session (tmpfs when present)
-      .config("spark.local.dir", graft.core.Scratch.sparkLocalDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     // One retry per query: a transient driver-side hiccup (e.g. a glob
     // listing briefly returning empty under concurrent FS churn — observed
@@ -31,6 +17,7 @@ object Verify {
     // (mirrors SPARK_GRAFT_BENCH_ONLY); the driver runs unfiltered
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
       .foreach { case (name, fn) =>
@@ -39,16 +26,19 @@ object Verify {
           .parquet(s"$outDir/$name")
       try attempt()
       catch {
-        case e1: Throwable =>
+        case NonFatal(e1) =>
           System.err.println(s"[verify] $name attempt 1 failed " +
             s"(${e1.getMessage}); retrying")
           Thread.sleep(500)
           try attempt()
-          catch { case e2: Throwable =>
+          catch { case NonFatal(e2) =>
             System.err.println(s"[verify] $name failed: ${e2.getMessage}")
+            failed += name
           }
       }
     }
+    System.err.println(s"[verify] ${failed.size} queries failed" +
+      (if (failed.isEmpty) "" else failed.mkString(": ", ", ", "")))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

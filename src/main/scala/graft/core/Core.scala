@@ -55,7 +55,8 @@ object Tables {
       // micros value is unchanged). Both normalize to the same TIMESTAMP
       // column; DuckDB reads the same file natively either way, and oracle
       // SQL casts outputs to TIMESTAMP (us) to keep output types aligned.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // The raw-nanos read needs spark.sql.legacy.parquet.nanosAsLong,
+      // which graft.Sessions sets at build time.
       val df = spark.read.parquet(s"$dir/$name.parquet")
       if (name == "events") df.withColumn("ts", normTs(df, "ts")) else df
     })

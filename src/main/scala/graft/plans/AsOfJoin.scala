@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Ascending, Attribute, BindReferences, Expression, GenericInternalRow,
@@ -149,8 +149,9 @@ case class AsOfJoinExec(
 
 /** Public API: `AsOf.join(left, right, key, time)` — key columns must be
   * integral, time columns timestamp or long (compared on their internal
-  * long encoding). The strategy self-registers into the session's
-  * experimental strategies (idempotent).
+  * long encoding). `AsOfStrategy` plans it; the strategy is injected at
+  * session build time (graft.functions.GraftExtensions), so a session not
+  * built by graft.Sessions fails to plan the join.
   */
 object AsOf {
   def join(
@@ -159,10 +160,6 @@ object AsOf {
       leftKeyCol: String, leftTimeCol: String,
       rightKeyCol: String, rightTimeCol: String): DataFrame = {
     val spark = leftDf.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfStrategy
-
     def keyed(df: DataFrame, keyCol: String, timeCol: String): DataFrame = {
       val kt = df.schema(keyCol).dataType
       val tt = df.schema(timeCol).dataType

@@ -78,11 +78,10 @@ object StreamOps {
   /** Memoized batch-read schema per (path, mtime): every replay otherwise
     * pays a fresh footer-probing batch datasource just to pin the stream
     * schema. The mtime in the key invalidates the entry if a file is
-    * rewritten in place with a different schema. The conf caveat remains:
-    * eventsStream sets nanosAsLong before the events path is ever probed,
-    * so the memoized schema is the nanos-aware one; a foreign session
-    * probing the same path without that conf would see the same schema
-    * only because the conf is global to this JVM's graft sessions.
+    * rewritten in place with a different schema. The memoized events
+    * schema is the nanos-aware one because graft.Sessions builds every
+    * session with nanosAsLong; a session built without it would read a
+    * different schema for the same path.
     */
   private val fileSchemas = scala.collection.concurrent.TrieMap
     .empty[(String, Long), org.apache.spark.sql.types.StructType]
@@ -145,7 +144,6 @@ object StreamOps {
   }
 
   private def eventsStream(s: SparkSession, dir: String, copies: Int = 1): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val st = fileStream(s, s"$dir/events.parquet", "graft_stream_events", copies)
     // same lake-generation schema drift as Tables.apply: raw-long nanos
     // vs native timestamp — normalize identically

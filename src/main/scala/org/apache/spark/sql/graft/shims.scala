@@ -26,12 +26,4 @@ object shims {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** Drain the async listener bus (private[spark]): a probe that tags
-    * QueryExecutionListener events per query must wait for delivery
-    * before reading/advancing the tag, or events attribute to the NEXT
-    * query (round-15 advice on InventoryCensus).
-    */
-  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.llmops.{MinHashLSH, Shingles}
 
@@ -10,18 +9,12 @@ import graft.llmops.{MinHashLSH, Shingles}
   * true-pair density stays constant — the corpus grows, the answer set
   * grows proportionally, and a linear data path should show ~linear time
   * (vs the oracle's brute-force pair join growing quadratically).
-  * Results are recorded in docs/SCALING.md.
+  * Results are recorded in docs/SCALING.md. Runs at SPARK_GRAFT_CPUS
+  * (default 4) with the graft.Sessions config.
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // comma-separated section filter for re-measuring one family without
     // paying the whole probe:
     // neardup,setsim,nn,km,inc,lm,bpe,contam,pr,qc,evt,cn,cnskew,budget,

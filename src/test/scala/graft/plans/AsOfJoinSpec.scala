@@ -47,5 +47,8 @@ class AsOfJoinSpec extends AnyFunSuite {
     val plan = AsOfQueries.q14b.build(spark, dir)
       .queryExecution.executedPlan.toString
     assert(plan.contains("AsOfJoin"), s"expected AsOfJoinExec in:\n$plan")
+    // planned by the strategy GraftExtensions injects at session build;
+    // AsOf.join adds nothing to the live session
+    assert(spark.experimental.extraStrategies.isEmpty)
   }
 }
